@@ -16,6 +16,31 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` for this process: ``SPARK_DRIVER_MEM`` verbatim
+    when set, else ``min(32g, MemTotal / 2)``.
+
+    The heap must be backable by physical RAM or Spark never spills: the
+    unified pool is 0.6 x (heap - 300 MB), and with a heap larger than the
+    machine G1 grows the committed heap instead of collecting, so cached
+    MEMORY_AND_DISK blocks are never evicted before the kernel's OOM killer
+    ends the JVM. The other half of RAM is left for the JVM's off-heap, one
+    Python worker per task slot and the calling process. Where ``meminfo``
+    cannot be read (not Linux) the 32g ceiling applies."""
+    explicit = os.environ.get("SPARK_DRIVER_MEM")
+    if explicit:
+        return explicit
+    try:
+        with open(meminfo) as f:
+            total_mb = next(
+                int(line.split()[1]) // 1024 for line in f if line.startswith("MemTotal:")
+            )
+    except OSError:
+        return "32g"
+    half_mb = total_mb // 2
+    return f"{half_mb}m" if half_mb < 32 * 1024 else "32g"
+
+
 def get_spark(
     app_name: str = "plenario-mapper-spark",
     master: str | None = None,
@@ -69,10 +94,12 @@ def get_spark(
         # so results are environment-independent.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        # local[N] runs every executor thread inside the driver JVM: size the heap
-        # for N concurrent task slots or GC becomes the bottleneck (a real cluster
-        # sizes spark.executor.memory instead and this value is irrelevant there).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        # local[N] runs every executor thread inside the driver JVM, so this is
+        # the heap of all N task slots. It is sized from physical memory (see
+        # default_driver_memory): a heap the machine cannot back never spills
+        # and is OOM-killed instead (a real cluster sizes spark.executor.memory
+        # and this value is irrelevant there).
+        .config("spark.driver.memory", default_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -30,6 +30,18 @@ def ddb():
     con.close()
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _release_registry_caches(spark):
+    """Unpin the built plans and registry-persisted intermediates of every
+    query once this module is done, so the test files that share the session
+    after it do not carry them. Released at module end, not per test: both
+    tests of a query reuse its built plan."""
+    from plenario_mapper_spark.plans.registry import release_query_caches
+
+    yield
+    release_query_caches(spark)
+
+
 def _canon(rows, colnames):
     order = sorted(range(len(colnames)), key=lambda i: colnames[i])
     out = []

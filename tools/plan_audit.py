@@ -184,7 +184,8 @@ def main() -> None:
     # get_spark, not a bare builder: the registry sweep runs all 337 queries
     # in one session and the audit phase builds broadcasts on top of that —
     # the 1g default driver heap OOM'd at exactly that point once the sweep
-    # grew past ~330 queries (r11). The engine session sets the 32g driver.
+    # grew past ~330 queries (r11). The engine session sizes the driver heap
+    # from physical memory (min(32g, half of RAM), or SPARK_DRIVER_MEM).
     spark = get_spark(
         app_name="plan-audit",
         master=f"local[{CPUS}]",
