@@ -340,8 +340,9 @@ def _stream_throughput(
 
     # JVM literal frames, not createDataFrame: a pickled-RDD meta frame costs a
     # 32-slice Python-worker scan EVERY time the per-batch registry refresh
-    # touches it (metadata._pin_local still collects it once per batch). A
-    # production provider reads JDBC/parquet — also JVM-native.
+    # touches it (metadata._pin_local collects it once per batch; a
+    # local_rows frame keeps its rows and is never collected). A production
+    # provider reads JDBC/parquet — also JVM-native.
     from plenario_mapper_spark.functions.local_rel import local_rows
 
     def metadata_provider(s):

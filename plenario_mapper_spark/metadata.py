@@ -11,11 +11,29 @@ broadcast hash join (SURVEY §2 C1/C2).
 
 At 100 TB the stream side is huge but this dimension is a schema registry (KBs-MBs):
 it is always broadcastable, so the whole validation pipeline is shuffle-free.
+
+Refresh design. The registry is KB-sized, so everything about it is decided on
+the driver in plain Python: each dimension is pinned once (`_pin_local`: one
+collect, or none when it already is a `local_rows` frame, which keeps its
+Python rows), lower-cased and flattened by `mapping_rows`/`kmap_entries`/
+`feature_list`, and turned back into a Spark relation only as ONE literal
+(`kmap_relation`, via `functions/local_rel`) when a consumer needs it. A
+micro-batch stream compares the flattened kmaps of consecutive refreshes
+(`pinned_kmap`, `changed_sensors`), rebuilds no relation when they are equal,
+and builds the new kmap straight from the entries it compared when they are
+not (`streaming.pipeline.MapperStream`). `build_mapping` stays a Spark plan
+(needed as-is for dimensions that cannot be collected, such as a streaming
+source); on pinned dimensions it also carries the Python flatten, so
+`sensor_kmap` reads that instead of running the plan.
+
+Python `str.lower` stands in for Spark's `lower`; the two agree on ASCII,
+which is what registry names and keys are (Spark lower-cases other text with
+the JVM's default locale rules).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 # Columns of the flattened registry.
 MAPPING_COLS = ("sensor", "raw_key", "feature", "property", "type")
@@ -54,22 +72,109 @@ def _pin_local(df: DataFrame) -> DataFrame:
     join plans as a full 32-partition sort-merge join over Python scans
     (measured 24-88 executor task-sec PER MICRO-BATCH at bench). Pinning
     costs one tiny collect and makes every downstream registry plan a pure
-    local-relation job with exact (KB) size estimates.
+    local-relation job with exact (KB) size estimates. The pinned frame keeps
+    the collected rows (`_plenario_rows`) for the driver-side flatten — also
+    when local_rows falls back to createDataFrame (more than its literal row
+    cap, or a value the literal cannot render), so a large registry is still
+    compared on the driver.
 
-    Idempotent and cheap to repeat: a frame that is already a literal relation
+    Idempotent and cheap to repeat: a frame that already keeps its rows
     (local_rows output — including a prior pin) is returned as-is, so callers
     can pin once at entry (streaming.process_batch) and the pins inside
     build_mapping/feature_registry become no-ops instead of extra collects."""
-    if getattr(df, "_plenario_local", False):
+    if getattr(df, "_plenario_rows", None) is not None:
         return df
     from pyspark.errors import AnalysisException
 
     from plenario_mapper_spark.functions.local_rel import local_rows
 
     try:
-        return local_rows(df.sparkSession, df.collect(), df.schema)
+        rows = df.collect()
     except AnalysisException:
         return df  # a streaming frame: collect() is unsupported, keep the plan
+    out = local_rows(df.sparkSession, rows, df.schema)
+    out._plenario_rows = getattr(out, "_plenario_rows", rows)
+    return out
+
+
+def _lower(s: str | None) -> str | None:
+    return None if s is None else s.lower()
+
+
+def mapping_rows(sensor_rows, feature_rows) -> list[tuple]:
+    """build_mapping over Python rows of the two dimensions: one
+    (sensor, raw_key, feature, property, type) tuple per observed_properties
+    entry, in sensor-row then map order.
+
+    Same semantics as the Spark formulation (`_join_mapping`): every name,
+    key, value and type is lower-cased (lower_*_metadata; a key that collides
+    after lower-casing keeps its LAST value, the session's LAST_WIN map-key
+    policy); `feature.property` splits on the FIRST dot, a value with no dot
+    gives a NULL property, and a NULL value gives NULL feature and property;
+    a (feature, property) with no type row keeps type NULL, and one with
+    several type rows yields one row per type (the left join)."""
+    types: dict[tuple[str, str], list] = {}
+    for r in feature_rows:
+        feature = _lower(r["name"])
+        for p in r["observed_properties"] or ():
+            if feature is not None and p is not None and p["name"] is not None:
+                types.setdefault((feature, p["name"].lower()), []).append(_lower(p["type"]))
+    out = []
+    for r in sensor_rows:
+        sensor = _lower(r["name"])
+        lowered: dict = {}
+        for k, fp in (r["observed_properties"] or {}).items():
+            lowered[k.lower()] = _lower(fp)
+        for raw_key, fp in lowered.items():
+            feature, prop = None, None
+            if fp is not None:
+                feature, dot, rest = fp.partition(".")
+                prop = rest if dot else None
+            for typ in types.get((feature, prop), [None]):
+                out.append((sensor, raw_key, feature, prop, typ))
+    return out
+
+
+def kmap_entries(mapping) -> dict[str, dict[str, tuple]]:
+    """sensor -> raw_key -> (feature, property, type, fp) from mapping rows
+    (a later row for the same key wins). fp follows concat_ws: a NULL property
+    yields fp == feature."""
+    by_sensor: dict[str, dict] = {}
+    for sensor, raw_key, feature, prop, typ in mapping:
+        fp = feature if prop is None else f"{feature}.{prop}"
+        by_sensor.setdefault(sensor, {})[raw_key] = (feature, prop, typ, fp)
+    return by_sensor
+
+
+def feature_list(feature_rows) -> list[dict]:
+    """The sink-table registry from Python feature rows, lower-cased like
+    lower_feature_metadata: [{"feature", "properties": [(name, type)]}]."""
+    return [
+        {
+            "feature": _lower(r["name"]),
+            "properties": [
+                (None, None) if p is None else (_lower(p["name"]), _lower(p["type"]))
+                for p in r["observed_properties"] or ()
+            ],
+        }
+        for r in feature_rows
+    ]
+
+
+def pinned_kmap(sensor_meta: DataFrame, feature_meta: DataFrame) -> dict | None:
+    """kmap_entries of two PINNED dimensions, from the rows they keep; None
+    when either has none (a streaming frame _pin_local could not collect)."""
+    sensor_rows = getattr(sensor_meta, "_plenario_rows", None)
+    feature_rows = getattr(feature_meta, "_plenario_rows", None)
+    if sensor_rows is None or feature_rows is None:
+        return None
+    return kmap_entries(mapping_rows(sensor_rows, feature_rows))
+
+
+def changed_sensors(stale: dict, fresh: dict) -> frozenset[str]:
+    """Sensors whose key map differs between two kmap_entries versions
+    (added, dropped or edited): only their rows can change discrepancy state."""
+    return frozenset(s for s in stale.keys() | fresh.keys() if stale.get(s) != fresh.get(s))
 
 
 def build_mapping(sensor_meta: DataFrame, feature_meta: DataFrame) -> DataFrame:
@@ -80,9 +185,24 @@ def build_mapping(sensor_meta: DataFrame, feature_meta: DataFrame) -> DataFrame:
     A (feature, property) with no type row keeps type NULL — which downstream is a
     coercion error, matching the reference's unrecognized-type branch
     (app/mapper.js:233-239).
+
+    The result is the Spark plan of that flatten over the pinned dimensions.
+    When both kept their rows it also carries the same flatten computed on the
+    driver (`mapping_rows`) as `_plenario_rows`, so sensor_kmap needs no job.
     """
-    sm = lower_sensor_metadata(_pin_local(sensor_meta))
-    fm = lower_feature_metadata(_pin_local(feature_meta))
+    sm, fm = _pin_local(sensor_meta), _pin_local(feature_meta)
+    out = _join_mapping(sm, fm)
+    sensor_rows = getattr(sm, "_plenario_rows", None)
+    feature_rows = getattr(fm, "_plenario_rows", None)
+    if sensor_rows is not None and feature_rows is not None:
+        out._plenario_rows = mapping_rows(sensor_rows, feature_rows)
+    return out
+
+
+def _join_mapping(sensor_meta: DataFrame, feature_meta: DataFrame) -> DataFrame:
+    """build_mapping's Spark plan."""
+    sm = lower_sensor_metadata(sensor_meta)
+    fm = lower_feature_metadata(feature_meta)
 
     keys = sm.select(
         F.col("name").alias("sensor"),
@@ -119,42 +239,35 @@ def sensor_kmap(mapping: DataFrame) -> DataFrame:
     join on `sensor` plus JVM map functions over the row's payload.
 
     The registry is KB-sized by construction (a schema registry, not data), so it
-    is assembled on the DRIVER and shipped as LocalTableScan -> BroadcastExchange:
-    no groupBy shuffle just to build a dimension, and the stream-side plan stays
+    is assembled on the DRIVER — from the rows build_mapping carries, else one
+    collect — and shipped as LocalTableScan -> BroadcastExchange: no groupBy
+    shuffle just to build a dimension, and the stream-side plan stays
     completely exchange-free (verified by test_pipeline_is_shuffle_free).
     """
-    spark = mapping.sparkSession
-    by_sensor: dict[str, dict] = {}
-    for r in mapping.collect():
-        # concat_ws semantics: a NULL property yields fp == feature
-        fp = r["feature"] if r["property"] is None else f"{r['feature']}.{r['property']}"
-        by_sensor.setdefault(r["sensor"], {})[r["raw_key"]] = (
-            r["feature"],
-            r["property"],
-            r["type"],
-            fp,
-        )
-    rows = sorted(by_sensor.items())
-    # JVM literal relation, not createDataFrame: the registry is re-scanned by
-    # every mapper job (and per micro-batch in streaming), and the pickled-RDD
-    # form spawns a fleet of Python workers per scan — see functions/local_rel.
+    rows = getattr(mapping, "_plenario_rows", None)
+    if rows is None:
+        rows = mapping.select(*MAPPING_COLS).collect()
+    return kmap_relation(mapping.sparkSession, kmap_entries(rows))
+
+
+def kmap_relation(spark, entries: dict[str, dict[str, tuple]]) -> DataFrame:
+    """The sensor_kmap relation of kmap_entries output, one row per sensor in
+    sensor order. A JVM literal relation, not createDataFrame: the registry is
+    re-scanned by every mapper job (and per micro-batch in streaming), and the
+    pickled-RDD form spawns a fleet of Python workers per scan — see
+    functions/local_rel."""
     from plenario_mapper_spark.functions.local_rel import local_rows
 
-    return local_rows(spark, rows, KMAP_SCHEMA) if rows else empty_kmap(spark)
+    return local_rows(spark, sorted(entries.items()), KMAP_SCHEMA) if entries else empty_kmap(spark)
 
 
 def feature_registry(feature_meta: DataFrame) -> list[dict]:
     """Driver-side list of features and their typed properties — the sink-table
     registry (DDL pre-created in the reference, tests/configure_tests.js:79-161).
     Small by construction (a schema registry), so collecting it is correct."""
-    fm = lower_feature_metadata(_pin_local(feature_meta))
-    return [
-        {
-            "feature": r["name"],
-            "properties": [(p["name"], p["type"]) for p in r["observed_properties"]],
-        }
-        for r in fm.collect()
-    ]
+    fm = _pin_local(feature_meta)
+    rows = getattr(fm, "_plenario_rows", None)
+    return feature_list(fm.collect() if rows is None else rows)
 
 
 def empty_kmap(spark) -> DataFrame:

@@ -17,17 +17,49 @@ whole pipeline is narrow (no shuffle), pipelined inside whole-stage codegen, and
 scales linearly with input splits. Routing to per-feature tables is filter+project
 per registry entry (registry is small by construction); the lake-mode sink is a
 single write partitioned by (network, feature).
+
+Plan-build cost: every Column tree below is name-based and independent of the
+batch, so each builder takes its trees from `_memo` — built once per live
+SparkContext and keyed by the builder's flags — and applies them with one
+`withColumns`/`select` per let-binding level. Rebuilding the trees per call
+costs thousands of py4j round trips (each `F.*` call is several), which a
+micro-batch stream would pay on every trigger.
 """
 
 from __future__ import annotations
 
+from collections import OrderedDict
 from dataclasses import dataclass, field
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, functions as F
 
 from plenario_mapper_spark.functions import coercion as C
 
 ENVELOPE = ("node_id", "datetime", "meta_id", "sensor", "network")
+
+
+# Memoized builds kept per context, least recently used dropped first. The
+# steady state needs a few per builder flag set plus one per registry feature
+# and layout; retyped or added properties make new `feature_rows` keys, so a
+# long-running stream would otherwise grow the memo without bound.
+_MEMO_SIZE = 1024
+
+
+def _memo(key: tuple, build):
+    """`build()` once per live SparkContext and `key` (an LRU of `_MEMO_SIZE`
+    entries). Columns wrap JVM objects, so the memo lives on the context
+    object itself: a new context (a new JVM session) starts with an empty
+    memo and never sees a stale `_jc`."""
+    sc = SparkContext._active_spark_context
+    memo = sc.__dict__.setdefault("_plenario_mapper_columns", OrderedDict())
+    if key in memo:
+        memo.move_to_end(key)
+        return memo[key]
+    memo[key] = value = build()
+    if len(memo) > _MEMO_SIZE:
+        memo.popitem(last=False)
+    return value
 
 
 def normalize(obs: DataFrame, data_col: str = "data") -> DataFrame:
@@ -69,12 +101,15 @@ def normalize(obs: DataFrame, data_col: str = "data") -> DataFrame:
     same trick annotate() uses for its HOF pass).
     """
     parsed_c, cheap_c = f"_{data_col}_parsed", f"_{data_col}_cheap"
-    df = obs.withColumn(
-        parsed_c, F.try_parse_json(F.col(data_col)).cast("map<string, variant>")
-    )
-    p = F.col(parsed_c)
-    df = df.withColumn(cheap_c, F.transform_keys(p, lambda k, _: F.lower(k)))
-    c = F.col(cheap_c)
+    levels = _memo(("normalize", data_col), lambda: _normalize_levels(data_col))
+    for level in levels:
+        obs = obs.withColumns(level)
+    return obs.drop(parsed_c, cheap_c)
+
+
+def _normalize_levels(data_col: str) -> list[dict[str, Column]]:
+    parsed_c, cheap_c = f"_{data_col}_parsed", f"_{data_col}_cheap"
+    p, c = F.col(parsed_c), F.col(cheap_c)
     keys = F.json_object_keys(F.col(data_col))
     exact = F.map_from_entries(
         F.transform(
@@ -87,19 +122,17 @@ def normalize(obs: DataFrame, data_col: str = "data") -> DataFrame:
             ),
         )
     )
-    return df.withColumns(
+    return [
+        {parsed_c: F.try_parse_json(F.col(data_col)).cast("map<string, variant>")},
+        {cheap_c: F.transform_keys(p, lambda k, _: F.lower(k))},
         {
             "node_id": F.lower("node_id"),
             "sensor": F.lower("sensor"),
             data_col: F.when(p.isNull(), F.lit(None).cast("map<string,variant>"))
             .when(F.size(c) == F.size(p), c)
             .otherwise(exact),
-        }
-    ).drop(parsed_c, cheap_c)
-
-
-def _entry_info(kmap: Column, key: Column) -> Column:
-    return F.element_at(kmap, key)
+        },
+    ]
 
 
 def annotate(
@@ -165,8 +198,21 @@ def annotate(
     column re-probing the variant map — re-evaluated the whole interpreted
     expression tree per column per key and was ~20x slower.)
     """
-    fused = typed or emit or misfit or alert or not carry_variant
+    flags = (typed, emit, misfit, alert, carry_variant)
+    levels = _memo(("annotate", flags), lambda: _annotate_levels(*flags))
     df = obs.join(F.broadcast(kmap_df), "sensor", "left")
+    for level in levels:
+        df = df.withColumns(level)
+    return df
+
+
+def _annotate_levels(
+    typed: bool, emit: bool, misfit: bool, alert: bool, carry_variant: bool
+) -> list[dict[str, Column]]:
+    """annotate's derived columns as let-binding levels: `_ann` first (every
+    later column reads it), then the key lists, then the rest (`bad_keys`
+    reads the key lists), in annotate's output column order."""
+    fused = typed or emit or misfit or alert or not carry_variant
 
     kmap = F.col("kmap")
     data = F.col("data")
@@ -308,72 +354,55 @@ def annotate(
     ann = F.when(kmap.isNull(), F.transform(F.map_entries(data), cheap_entry)).otherwise(
         full
     )
-    df = df.withColumn("_ann", ann).withColumn("_known", kmap.isNotNull())
-
     a = F.col("_ann")
-    df = (
-        df.withColumn(
-            "invalid_keys",
-            F.transform(F.filter(a, lambda x: x["unknown"]), lambda x: x["key"]),
-        )
-        .withColumn(
-            "error_keys",
-            F.transform(F.filter(a, lambda x: x["err"]), lambda x: x["key"]),
-        )
-        .withColumn("bad_keys", F.concat("invalid_keys", "error_keys"))
-        .withColumn(
-            "features",
-            F.array_distinct(
-                F.transform(
-                    F.filter(a, lambda x: ~(x["unknown"] | x["err"])),
-                    lambda x: (x["feature"] if fused else x["info"]["feature"]),
-                )
-            ),
-        )
-    )
+    keys = {
+        "invalid_keys": F.transform(F.filter(a, lambda x: x["unknown"]), lambda x: x["key"]),
+        "error_keys": F.transform(F.filter(a, lambda x: x["err"]), lambda x: x["key"]),
+    }
+    derived = {
+        "bad_keys": F.concat("invalid_keys", "error_keys"),
+        "features": F.array_distinct(
+            F.transform(
+                F.filter(a, lambda x: ~(x["unknown"] | x["err"])),
+                lambda x: (x["feature"] if fused else x["info"]["feature"]),
+            )
+        ),
+    }
     if misfit:
         # unknown-sensor rows (cheap _ann entries carry no mpiece): the misfit
         # half IS the whole data map, and to_json(map<string,variant>) is
         # byte-identical to the piece-concat render (pinned by
         # test_mapper_fused) — one variant render per row, no per-entry work
-        df = df.withColumn(
-            "misfit_json",
-            F.when(kmap.isNull(), F.to_json(data)).otherwise(
-                F.when(
-                    a.isNotNull(),
-                    F.concat(
-                        F.lit("{"),
-                        F.concat_ws(
-                            ",",
-                            F.transform(
-                                F.filter(a, lambda x: x["unknown"] | x["err"]),
-                                lambda x: x["mpiece"],
-                            ),
+        derived["misfit_json"] = F.when(kmap.isNull(), F.to_json(data)).otherwise(
+            F.when(
+                a.isNotNull(),
+                F.concat(
+                    F.lit("{"),
+                    F.concat_ws(
+                        ",",
+                        F.transform(
+                            F.filter(a, lambda x: x["unknown"] | x["err"]),
+                            lambda x: x["mpiece"],
                         ),
-                        F.lit("}"),
                     ),
-                )
-            ),
+                    F.lit("}"),
+                ),
+            )
         )
     if carry_variant:
-        df = df.withColumn(
-            "misfit_data",
-            F.map_from_entries(
-                F.transform(
-                    F.filter(a, lambda x: x["unknown"] | x["err"]),
-                    lambda x: F.struct(x["key"], x["value"]),
-                )
-            ),
-        ).withColumn(
-            "clean_data",
-            F.map_from_entries(
-                F.transform(
-                    F.filter(a, lambda x: ~(x["unknown"] | x["err"])),
-                    lambda x: F.struct(x["key"], x["value"]),
-                )
-            ),
+        derived["misfit_data"] = F.map_from_entries(
+            F.transform(
+                F.filter(a, lambda x: x["unknown"] | x["err"]),
+                lambda x: F.struct(x["key"], x["value"]),
+            )
         )
-    return df
+        derived["clean_data"] = F.map_from_entries(
+            F.transform(
+                F.filter(a, lambda x: ~(x["unknown"] | x["err"])),
+                lambda x: F.struct(x["key"], x["value"]),
+            )
+        )
+    return [{"_ann": ann, "_known": kmap.isNotNull()}, keys, derived]
 
 
 def sink_projection(annotated: DataFrame, extra: tuple[str, ...] = ("seq",)) -> DataFrame:
@@ -395,6 +424,11 @@ def sink_projection(annotated: DataFrame, extra: tuple[str, ...] = ("seq",)) -> 
 
     The per-entry filters run ONCE here instead of once per sink on every
     cache read."""
+    cols = _memo(("sink_projection", tuple(extra)), lambda: _sink_projection_cols(extra))
+    return annotated.select(*cols)
+
+
+def _sink_projection_cols(extra: tuple[str, ...]) -> list[Column]:
     a = F.col("_ann")
     clean = F.transform(
         F.filter(a, lambda x: ~(x["unknown"] | x["err"])),
@@ -414,17 +448,8 @@ def sink_projection(annotated: DataFrame, extra: tuple[str, ...] = ("seq",)) -> 
             x["tof"].alias("tof"),
         ),
     )
-    return annotated.select(
-        *ENVELOPE,
-        *extra,
-        "_known",
-        "invalid_keys",
-        "bad_keys",
-        "features",
-        "misfit_json",
-        clean.alias("_clean"),
-        errs.alias("_errs"),
-    )
+    names = (*ENVELOPE, *extra, "_known", "invalid_keys", "bad_keys", "features", "misfit_json")
+    return [F.col(c) for c in names] + [clean.alias("_clean"), errs.alias("_errs")]
 
 
 def dead_letter(annotated: DataFrame) -> DataFrame:
@@ -433,9 +458,15 @@ def dead_letter(annotated: DataFrame) -> DataFrame:
     per record that has any bad key (insert_emit split, :251-268). Uses the
     pre-rendered misfit_json when annotate produced it (byte-identical to
     to_json(misfit_data) — pinned by test_mapper_fused)."""
+    pre_rendered = "misfit_json" in annotated.columns
+    cond, cols = _memo(("dead_letter", pre_rendered), lambda: _dead_letter_cols(pre_rendered))
+    return annotated.filter(cond).select(*cols)
+
+
+def _dead_letter_cols(pre_rendered: bool) -> tuple[Column, list[Column]]:
     residue = (
         F.col("misfit_json")
-        if "misfit_json" in annotated.columns
+        if pre_rendered
         # unknown sensor -> the misfit half IS the whole (lowercased) data map;
         # rendering it directly skips the per-entry rebuild for the class of
         # rows that is 100% of this sink's unknown-sensor traffic
@@ -443,14 +474,8 @@ def dead_letter(annotated: DataFrame) -> DataFrame:
             F.to_json("misfit_data")
         )
     )
-    return annotated.filter(F.size("bad_keys") > 0).select(
-        "network",
-        "node_id",
-        "datetime",
-        "meta_id",
-        "sensor",
-        residue.alias("data"),
-    )
+    cols = [F.col(c) for c in ("network", "node_id", "datetime", "meta_id", "sensor")]
+    return F.size("bad_keys") > 0, cols + [residue.alias("data")]
 
 
 def clean_rows(annotated: DataFrame) -> DataFrame:
@@ -458,8 +483,12 @@ def clean_rows(annotated: DataFrame) -> DataFrame:
     of insert_emit (app/mapper.js:269-271). `features` is non-empty exactly when
     clean_data is (every clean entry contributes a feature); variant-free frames
     carry only the former."""
-    gate = "clean_data" if "clean_data" in annotated.columns else "features"
-    return annotated.filter(F.size(gate) > 0)
+    gate = _clean_gate_column(annotated)
+    return annotated.filter(_memo(("clean_rows", gate), lambda: F.size(gate) > 0))
+
+
+def _clean_gate_column(annotated: DataFrame) -> str:
+    return "clean_data" if "clean_data" in annotated.columns else "features"
 
 
 def feature_rows(
@@ -476,6 +505,18 @@ def feature_rows(
     reference's feature_query_text does (app/mapper.js:336-354).
     """
     pre_typed = "_clean" in annotated.columns
+    gate = _clean_gate_column(annotated)
+    key = ("feature_rows", feature, tuple(properties), pre_typed, gate)
+    cond, bound, cols = _memo(
+        key, lambda: _feature_rows_cols(feature, properties, pre_typed, gate)
+    )
+    return annotated.filter(cond).select(*bound).select(*cols)
+
+
+def _feature_rows_cols(
+    feature: str, properties: list[tuple[str, str]], pre_typed: bool, gate: str
+) -> tuple[Column, list[Column], list[Column]]:
+    """(row filter, the envelope plus the `_fp` let-binding, output columns)."""
     if pre_typed:
         fp_map = F.map_from_entries(
             F.transform(
@@ -493,8 +534,6 @@ def feature_rows(
                 ),
             )
         )
-    df = clean_rows(annotated).filter(F.array_contains("features", feature))
-    df = df.withColumn("_fp", fp_map)
     cols = [F.col(c) for c in ENVELOPE]
     for prop, typ in properties:
         e = F.element_at("_fp", F.lit(f"{feature}.{prop}"))
@@ -506,7 +545,8 @@ def feature_rows(
                     e.isNotNull(), C.coerce_typed_vt(e["v"], e["vt"], typ)
                 ).alias(prop)
             )
-    return df.select(*cols)
+    cond = (F.size(gate) > 0) & F.array_contains("features", feature)
+    return cond, [F.col(c) for c in ENVELOPE] + [fp_map.alias("_fp")], cols
 
 
 def typed_field(tv: Column, sql_type: str) -> Column:
@@ -532,11 +572,17 @@ def emit_messages(annotated: DataFrame) -> DataFrame:
     as a JSON object string. Only the clean half emits; a record whose data was
     entirely bad emits nothing (insert_emit recursion guard, :269-271)."""
     pre_rendered = "_clean" in annotated.columns
-    df = clean_rows(annotated).select(
-        *ENVELOPE,
-        "_clean" if pre_rendered else "_ann",
-        F.explode("features").alias("feature"),
+    explode_cols, out_cols = _memo(
+        ("emit_messages", pre_rendered), lambda: _emit_cols(pre_rendered)
     )
+    return clean_rows(annotated).select(*explode_cols).select(*out_cols)
+
+
+def _emit_cols(pre_rendered: bool) -> tuple[list[Column], list[Column]]:
+    explode_cols = [F.col(c) for c in ENVELOPE] + [
+        F.col("_clean" if pre_rendered else "_ann"),
+        F.explode("features").alias("feature"),
+    ]
     # clean entries of THIS feature, rendered "property":<json literal>. On a
     # sink_projection frame (streaming's cached form) this is a plain string
     # filter+collect over the pre-rendered `jpiece` fragments; otherwise one
@@ -561,14 +607,15 @@ def emit_messages(annotated: DataFrame) -> DataFrame:
         )
     # results as a JSON object keyed by property name
     results_json = F.concat(F.lit("{"), F.concat_ws(",", pieces), F.lit("}"))
-    return df.select(
+    out_cols = [
         F.col("node_id").alias("node"),
-        "datetime",
-        "sensor",
-        "network",
-        "feature",
+        F.col("datetime"),
+        F.col("sensor"),
+        F.col("network"),
+        F.col("feature"),
         results_json.alias("results"),
-    )
+    ]
+    return explode_cols, out_cols
 
 
 @dataclass

@@ -4,13 +4,19 @@ The reference's runtime (SURVEY §3 EP1-EP3) maps as:
 
 - Kinesis shard consumption + KCL checkpointing/lease FSM (717 LoC of shim,
   app/lib/kcl/*) -> `readStream` + `checkpointLocation`: the offset WAL + commit
-  log give the same at-least-once replay (exactly-once with idempotent sinks —
-  an upgrade: the reference's Redshift PK is unenforced, so its replays duplicate);
+  log give the same at-least-once replay. `MapperStream`'s sinks are plain
+  appends (feature lake, dead-letter, emit, alerts) and its blacklist state is
+  overwritten in place, so a batch replayed after a crash DUPLICATES its sink
+  rows today, as the reference's replays do (its Redshift PK is unenforced).
+  Exactly-once needs idempotent per-batch sinks, which are not built yet
+  (ROADMAP item 4);
 - base64+JSON decode (kcl_app.js:38,44) -> F.unbase64 + permissive from_json with a
   corrupt-record column (the try/catch at kcl_app.js:43-48);
 - per-record metadata refresh-on-discrepancy (app/mapper.js:72-112) -> per-BATCH
-  refresh: the registry is re-read at the top of every micro-batch and the batch's
-  discrepant rows are re-evaluated against it. Documented divergence (SURVEY §7):
+  refresh: the registry is re-read at the top of every micro-batch, flattened
+  and compared on the driver (an unchanged registry reuses last batch's kmap
+  relation, see `metadata`), and the batch's discrepant rows are re-evaluated
+  against it. Documented divergence (SURVEY §7):
   a record landing in the same batch as its metadata fix alerts once where the
   reference might not, and vice versa — the steady-state behavior is identical;
 - alert blacklist (process memory, lost on crash) -> a persisted state table
@@ -36,7 +42,7 @@ from plenario_mapper_spark.operators import alerts as A
 from plenario_mapper_spark.operators import mapper as M
 from plenario_mapper_spark.sources.observations import (  # noqa: F401 (re-export)
     decode_kinesis_records,
-    file_obs_source as _file_obs_source,
+    file_obs_source,
 )
 
 
@@ -93,39 +99,30 @@ class MapperStream:
         self.spark = spark
         self.metadata_provider = metadata_provider
         self.sinks = sinks
-        # stale snapshot starts empty — the reference's startup state
+        # stale registry starts empty — the reference's startup state
         # (map={}, type_map={}, app/mapper.js:36-40)
         self._stale_kmap = metadata.empty_kmap(spark)
-        # driver-side value snapshot of _stale_kmap, memoized across batches:
-        # last batch's FRESH snapshot IS this batch's stale one, so the
-        # steady-state comparison costs ONE tiny collect per batch, not two
-        self._stale_snap: list | None = []
+        # driver-side kmap entries of the stale registry (metadata.kmap_entries);
+        # None when the last refresh had no Python rows to flatten (a
+        # streaming provider)
+        self._stale_entries: dict | None = {}
+        # sensors whose key map the last refresh changed (None: unknown)
+        self.changed_sensors: frozenset[str] | None = frozenset()
 
-    @staticmethod
-    def _snap(df: DataFrame) -> list:
-        return sorted(
-            (
-                r["sensor"],
-                tuple(sorted((k, tuple(v)) for k, v in (r["kmap"] or {}).items())),
-            )
-            for r in df.collect()
-        )
-
-    def _registry_unchanged(self, fresh_kmap: DataFrame) -> tuple[bool, list | None]:
-        """(stale == fresh, fresh snapshot). The registry is KB-sized by
-        construction (schema registry, not data), so a driver-side
-        collect-compare costs microseconds and saves a full annotate pass over
-        the batch in the steady state."""
-        try:
-            stale = (
-                self._stale_snap
-                if self._stale_snap is not None
-                else self._snap(self._stale_kmap)
-            )
-            fresh = self._snap(fresh_kmap)
-            return stale == fresh, fresh
-        except Exception:
-            return False, None  # conservative: run both passes
+    def _registry_unchanged(
+        self, sensor_meta: DataFrame, feature_meta: DataFrame
+    ) -> tuple[bool, dict | None]:
+        """(stale kmap == fresh kmap, fresh kmap entries) for two pinned
+        dimensions, and records `changed_sensors`. The registry is KB-sized by
+        construction (schema registry, not data), so flattening and comparing
+        it on the driver costs microseconds and saves the kmap rebuild and a
+        full annotate pass over the batch in the steady state."""
+        fresh = metadata.pinned_kmap(sensor_meta, feature_meta)
+        if fresh is None or self._stale_entries is None:
+            self.changed_sensors = None
+            return False, fresh  # conservative: rebuild and run both passes
+        self.changed_sensors = metadata.changed_sensors(self._stale_entries, fresh)
+        return not self.changed_sensors, fresh
 
     # -- state table ----------------------------------------------------------
     def _load_blacklist(self) -> DataFrame:
@@ -150,16 +147,23 @@ class MapperStream:
 
         _label("registry refresh")
         # F3: refresh the registry once per batch (vs per-record in the ref).
-        # Pin both dimensions to driver-local literal relations HERE, once —
-        # build_mapping and feature_registry pin too, but _pin_local is
-        # idempotent on an already-pinned frame, so this costs at most one
-        # collect per dimension per batch (zero when the provider already
-        # returns local_rows frames).
+        # Pin both dimensions HERE, once: at most one collect per dimension
+        # (none when the provider returns local_rows frames, which keep their
+        # rows), after which the flatten and the comparison with last batch's
+        # registry run in plain Python. An unchanged kmap reuses last batch's
+        # relation (no job, no literal); a changed one is built straight from
+        # the entries just compared.
         sensor_meta, feature_meta = self.metadata_provider(spark)
         sensor_meta = metadata._pin_local(sensor_meta)
         feature_meta = metadata._pin_local(feature_meta)
-        mapping = metadata.build_mapping(sensor_meta, feature_meta)
-        fresh_kmap = metadata.sensor_kmap(mapping).cache()
+        unchanged, fresh_entries = self._registry_unchanged(sensor_meta, feature_meta)
+        if unchanged:
+            fresh_kmap = self._stale_kmap
+        elif fresh_entries is not None:
+            fresh_kmap = metadata.kmap_relation(spark, fresh_entries).cache()
+        else:
+            mapping = metadata.build_mapping(sensor_meta, feature_meta)
+            fresh_kmap = metadata.sensor_kmap(mapping).cache()
         registry = metadata.feature_registry(feature_meta)
 
         obs = batch_df.withColumn("seq", F.monotonically_increasing_id())
@@ -202,11 +206,10 @@ class MapperStream:
                 carry_variant=False,
             )
         ).persist()
-        unchanged, fresh_snap = self._registry_unchanged(fresh_kmap)
         stale_all_discrepant = False
         if unchanged:
             stale_ann = fresh_ann
-        elif self._stale_snap == []:
+        elif self._stale_entries == {}:
             # EMPTY stale registry (the reference's startup state): annotating
             # against it would only prove that every record is a discrepancy
             # (kmap is NULL for every row), so skip the second full
@@ -300,12 +303,11 @@ class MapperStream:
         ev.unpersist()
         fresh_ann.unpersist()
         # next batch validates against this batch's registry (the ref's cached
-        # map); unpersist the OUTGOING snapshot or a long-running stream leaks
-        # one cached registry per micro-batch (no-op on the initial uncached
-        # empty_kmap).
+        # map); unpersist the OUTGOING kmap when it is replaced, or a
+        # long-running stream leaks one cached registry per registry change
+        # (no-op on the initial uncached empty_kmap).
         prev = self._stale_kmap
-        self._stale_kmap = fresh_kmap
-        self._stale_snap = fresh_snap
+        self._stale_kmap, self._stale_entries = fresh_kmap, fresh_entries
         if prev is not fresh_kmap:
             prev.unpersist()
 
@@ -323,12 +325,6 @@ class MapperStream:
         if trigger_once:
             writer = writer.trigger(availableNow=True)
         return writer.start()
-
-
-def file_obs_source(spark: SparkSession, input_dir: str) -> DataFrame:
-    """JSON-lines observation source for tests (schema-locked); canonical home is
-    `sources.observations.file_obs_source`."""
-    return _file_obs_source(spark, input_dir)
 
 
 def jdbc_per_feature_writer(

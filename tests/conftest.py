@@ -1,3 +1,5 @@
+import contextlib
+import gc
 import json
 
 import pytest
@@ -131,3 +133,27 @@ def final_plan(df) -> str:
     """
     s = df._jdf.queryExecution().executedPlan().toString()
     return s.split("== Initial Plan ==")[0]
+
+
+@contextlib.contextmanager
+def count_py4j_calls(spark):
+    """Yield a one-item list holding the number of py4j commands the driver
+    sends inside the block. Deletions of garbage-collected JVM references
+    ("m d" commands, sent whenever Python happens to free a wrapper) are not
+    counted, and the cycle collector is paused, so the count repeats."""
+    client = spark.sparkContext._gateway._gateway_client
+    orig, count = client.send_command, [0]
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            count[0] += 1
+        return orig(command, *args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    client.send_command = counting
+    try:
+        yield count
+    finally:
+        client.send_command = orig
+        gc.enable()

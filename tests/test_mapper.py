@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from plenario_mapper_spark.operators import mapper as M
+from tests.conftest import FEATURE_META_ROWS, SENSOR_META_ROWS
 
 
 @pytest.fixture(scope="module")
@@ -142,3 +143,108 @@ def test_pipeline_is_shuffle_free(result):
     plan = final_plan(result.annotated)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
     assert "Exchange hashpartitioning" not in plan
+
+
+_EDGE_SENSORS = [
+    ("HTU21D", {"Temp": "Temperature.Temperature", "raw": "temperature"}),
+    ("multi", {"a": "magnetic_field.x.y", "b": "magnetic_field.w"}),
+]
+
+
+@pytest.mark.parametrize(
+    "sensor_rows, feature_rows",
+    [
+        (SENSOR_META_ROWS, FEATURE_META_ROWS),
+        # uppercase name/key/fp, dotless fp, multi-dot fp, a property with no
+        # type row (magnetic_field.w)
+        (SENSOR_META_ROWS + _EDGE_SENSORS, FEATURE_META_ROWS),
+        ([], []),
+    ],
+    ids=["fixtures", "edge_cases", "empty"],
+)
+def test_python_flatten_matches_spark_flatten(spark, sensor_rows, feature_rows):
+    """The driver-side flatten (metadata.mapping_rows / kmap_entries /
+    feature_list, used for pinned dimensions) equals the Spark formulation
+    (lower_*_metadata + the left join + sensor_kmap's collect) row for row."""
+    from plenario_mapper_spark import metadata
+    from plenario_mapper_spark.functions.local_rel import local_rows
+    from plenario_mapper_spark.schemas import (
+        FEATURE_METADATA_SCHEMA,
+        SENSOR_METADATA_SCHEMA,
+    )
+
+    sm = spark.createDataFrame(sensor_rows, SENSOR_METADATA_SCHEMA)
+    fm = spark.createDataFrame(feature_rows, FEATURE_METADATA_SCHEMA)
+    spark_mapping = metadata._join_mapping(sm, fm)
+    assert sorted(metadata.mapping_rows(sm.collect(), fm.collect()), key=repr) == sorted(
+        (tuple(r) for r in spark_mapping.collect()), key=repr
+    )
+
+    def kmap_rows(df):
+        return [(r["sensor"], {k: tuple(v) for k, v in r["kmap"].items()}) for r in df.collect()]
+
+    pinned = (
+        local_rows(spark, sensor_rows, SENSOR_METADATA_SCHEMA),
+        local_rows(spark, feature_rows, FEATURE_METADATA_SCHEMA),
+    )
+    want = kmap_rows(metadata.sensor_kmap(spark_mapping))
+    assert kmap_rows(metadata.sensor_kmap(metadata.build_mapping(*pinned))) == want
+    assert sorted(metadata.pinned_kmap(*pinned).items()) == want
+
+    spark_features = [
+        {"feature": r["name"], "properties": [tuple(p) for p in r["observed_properties"]]}
+        for r in metadata.lower_feature_metadata(fm).collect()
+    ]
+    assert metadata.feature_registry(pinned[1]) == spark_features
+
+
+def test_registry_change_kinds_mark_changed_sensors(spark):
+    """Each change kind of the benchmark's registry generator (drop a key,
+    retype a property, add a sensor) marks exactly the sensors whose key map
+    it edits: drop -> the victim; retype -> every sensor mapping the retyped
+    property; add -> the new sensor."""
+    from perfbench import streamgen
+
+    from plenario_mapper_spark import metadata
+    from plenario_mapper_spark.functions.local_rel import local_rows
+    from plenario_mapper_spark.schemas import (
+        FEATURE_METADATA_SCHEMA,
+        SENSOR_METADATA_SCHEMA,
+    )
+
+    def entries(k):
+        reg = streamgen.registry_version(k)
+        return metadata.pinned_kmap(
+            local_rows(spark, reg.sensor_rows(), SENSOR_METADATA_SCHEMA),
+            local_rows(spark, reg.feature_rows(), FEATURE_METADATA_SCHEMA),
+        )
+
+    base = streamgen.base_registry()
+    v0 = entries(0)
+    for k in (1, 2, 3):
+        reg = streamgen.registry_version(k)
+        want = {s for s in base.sensors.keys() | reg.sensors.keys()
+                if base.sensors.get(s) != reg.sensors.get(s)}
+        want |= {
+            s for s, keys in reg.sensors.items() for fp in keys.values()
+            for f, props in reg.types.items() for p, t in props.items()
+            if fp == f"{f}.{p}" and base.types.get(f, {}).get(p) != t
+        }
+        assert want, k
+        assert metadata.changed_sensors(v0, entries(k)) == want, k
+    assert metadata.changed_sensors(v0, entries(0)) == frozenset()
+
+
+def test_column_memo_is_bounded(spark, monkeypatch):
+    """The mapper's Column-tree memo drops its least recently used entry past
+    its size, so keys made by registry edits cannot grow it forever."""
+    monkeypatch.setattr(M, "_MEMO_SIZE", 4)
+    # a fresh memo for this test; the session's own comes back afterwards
+    monkeypatch.delitem(spark.sparkContext.__dict__, "_plenario_mapper_columns", raising=False)
+    built = []
+    for i in range(10):
+        M._memo(("bounded", i), lambda i=i: built.append(i) or i)
+    M._memo(("bounded", 9), lambda: built.append("again"))
+    memo = spark.sparkContext._plenario_mapper_columns
+    assert list(memo) == [("bounded", i) for i in range(6, 10)]
+    assert built == list(range(10))
