@@ -51,22 +51,6 @@ def _is_null(vt: Column) -> Column:
     return vt == "VOID"
 
 
-def is_json_number(v: Column) -> Column:
-    return _is_num(vtype(v))
-
-
-def is_json_string(v: Column) -> Column:
-    return _is_str(vtype(v))
-
-
-def is_json_bool(v: Column) -> Column:
-    return _is_bool(vtype(v))
-
-
-def is_json_null(v: Column) -> Column:
-    return _is_null(vtype(v))
-
-
 def js_typeof_vt(v: Column, vt: Column) -> Column:
     """JS `typeof` of the JSON value — used in alert messages (app/mapper.js:449)."""
     return (
@@ -258,10 +242,6 @@ def coerce_typed_vt(v: Column, vt: Column, sql_type: str) -> Column:
     return F.lit(None).cast("string")
 
 
-def coerce_typed(v: Column, sql_type: str) -> Column:
-    return coerce_typed_vt(v, vtype(v), sql_type)
-
-
 def json_quote(s: Column) -> Column:
     """Render a plain string column as a JSON string literal (with escaping):
     to_json of a 1-element array, brackets stripped."""
@@ -292,7 +272,3 @@ def coerced_json_literal_vt(v: Column, vt: Column, t: Column) -> Column:
         .when(_is_in(t, BOOL_TYPES), coerce_bool_vt(v, vt)[1].cast("string"))
         .otherwise(F.lit(None).cast("string"))
     )
-
-
-def coerced_json_literal(v: Column, t: Column) -> Column:
-    return coerced_json_literal_vt(v, vtype(v), t)

@@ -47,13 +47,6 @@ def punct_ratio(text: Column) -> Column:
     return F.length(stripped) / F.greatest(F.length(text), F.lit(1))
 
 
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    toks = tokens(text)
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    return hits / F.greatest(F.size(toks), F.lit(1))
-
-
 def quality_score(text: Column) -> Column:
     """Composite [0,1] quality heuristic: length band + low punctuation +
     reasonable mean word length. Deterministic and JVM-only."""

@@ -35,16 +35,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
 def unit(a: Column) -> Column:
     """L2-normalized copy (pre-normalizing once beats normalizing per pair).
     Zero-norm vectors normalize to all-NULL elements (try_divide, see cosine)

@@ -27,6 +27,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from plenario_mapper_spark.functions import coercion as C
+from plenario_mapper_spark.operators.mapper import _memo
+
 BLACKLIST_SCHEMA = "sensor string"
 
 
@@ -62,32 +65,9 @@ def _unknown_keys_message() -> F.Column:
     )
 
 
-def _coercion_messages(fused: bool) -> F.Column:
+def _coercion_messages() -> F.Column:
     # One message per coercion-error key (app/mapper.js:443-451), using the ORIGINAL
     # value (errors[key] snapshots it) and its JS typeof.
-    if fused:
-        # The per-entry fields (property/typ and the String(value)/typeof
-        # renditions `orig`/`tof`) were computed in annotate's single pass over
-        # the variant map and pre-filtered into `_errs` by sink_projection — no
-        # registry or variant-map probe runs here, so the alert branch adds no
-        # interpreted variant work to the cached batch.
-        return F.transform(
-            F.col("_errs"),
-            lambda x: F.concat(
-                F.lit("Property "),
-                x["property"],
-                F.lit(" of sensor "),
-                F.col("sensor"),
-                F.lit(" expected type "),
-                F.coalesce(x["typ"], F.lit("undefined")),
-                F.lit(" and could not correctly coerce value "),
-                x["orig"],
-                F.lit(" of type "),
-                x["tof"],
-            ),
-        )
-    from plenario_mapper_spark.functions import coercion as C
-
     kmap = F.col("kmap")
     return F.transform(
         "error_keys",
@@ -125,6 +105,8 @@ def alert_events(
     the caller passes fresh_annotated for both sides and skips a full
     variant/HOF pass over the batch (streaming/pipeline.py batch 1).
     """
+    discrepant = _memo(("alert_events.discrepant",), _discrepant)
+    out_cols = _memo(("alert_events", order_col), lambda: _alert_event_cols(order_col))
     if stale_annotated is fresh_annotated:
         # Same frame on both sides — the steady state (registry unchanged) and
         # the startup state (stale empty, flag set). The join on the unique
@@ -135,23 +117,28 @@ def alert_events(
         df = (
             fresh_annotated
             if stale_all_discrepant
-            else fresh_annotated.filter(
-                ~F.col("_known") | (F.size("bad_keys") > 0)
-            )
+            else fresh_annotated.filter(discrepant)
         )
     else:
-        stale = stale_annotated.select(
-            order_col,
-            F.col("sensor").alias("_s_sensor"),
-            (
-                F.lit(True)
-                if stale_all_discrepant
-                else (~F.col("_known") | (F.size("bad_keys") > 0))
-            ).alias("discrepant"),
+        stale_cols = _memo(
+            ("alert_events.stale", order_col, stale_all_discrepant),
+            lambda: [
+                F.col(order_col),
+                F.col("sensor").alias("_s_sensor"),
+                (F.lit(True) if stale_all_discrepant else discrepant).alias("discrepant"),
+            ],
         )
+        stale = stale_annotated.select(*stale_cols)
         fresh = fresh_annotated.alias("f")
         df = fresh.join(stale.filter("discrepant"), order_col, "inner")
+    return df.select(*out_cols)
 
+
+def _discrepant() -> F.Column:
+    return ~F.col("_known") | (F.size("bad_keys") > 0)
+
+
+def _alert_event_cols(order_col: str) -> list[F.Column]:
     unknown_sensor = ~F.col("_known")
     still_bad = F.size("bad_keys") > 0
 
@@ -167,17 +154,17 @@ def alert_events(
                 F.when(
                     F.size("invalid_keys") > 0, F.array(_unknown_keys_message())
                 ).otherwise(F.array().cast("array<string>")),
-                _coercion_messages("_errs" in fresh_annotated.columns),
+                _coercion_messages(),
             ),
         )
         .otherwise(F.array().cast("array<string>"))
     )
-    return df.select(
+    return [
         F.col(order_col).alias("seq"),
-        "sensor",
+        F.col("sensor"),
         kind.alias("kind"),
         messages.alias("messages"),
-    )
+    ]
 
 
 def apply_blacklist(
@@ -193,32 +180,41 @@ def apply_blacklist(
     value is "resolve" or the JSON array of messages — the exact POST payload shape
     {name, value} (app/mapper.js:458-462).
     """
+    c = _memo(("apply_blacklist",), _blacklist_cols)
+    carried = blacklist.select(*c["carried"])
+    ev = events.join(carried, "sensor", "left").withColumns(c["carried_fill"])
+    ev = ev.withColumns(c["suppressed"])
+
+    alerts = ev.filter(c["emitted"]).select(*c["alert"])
+
+    last = ev.groupBy("sensor").agg(c["last_kind"])
+    untouched = blacklist.join(events.select("sensor").distinct(), "sensor", "left_anti")
+    new_blacklist = last.filter(c["last_error"]).select("sensor").union(untouched)
+    return alerts, new_blacklist
+
+
+def _blacklist_cols() -> dict:
     w = Window.partitionBy("sensor").orderBy("seq")
-    carried = blacklist.select("sensor", F.lit(True).alias("carried"))
-    ev = events.join(carried, "sensor", "left").withColumn(
-        "carried", F.coalesce("carried", F.lit(False))
-    )
     prev_kind = F.lag("kind").over(w)
     blacklisted_before = F.when(prev_kind.isNotNull(), prev_kind == "error").otherwise(
         F.col("carried")
     )
-    ev = ev.withColumn("suppressed", (F.col("kind") == "error") & blacklisted_before)
-
-    alerts = ev.filter(~F.col("suppressed")).select(
-        "seq",
-        F.col("sensor").alias("name"),
-        "kind",
-        F.when(F.col("kind") == "resolve", F.lit("resolve"))
-        .otherwise(F.to_json("messages"))
-        .alias("value"),
-    )
-
-    last = ev.groupBy("sensor").agg(F.max_by("kind", "seq").alias("last_kind"))
-    untouched = blacklist.join(events.select("sensor").distinct(), "sensor", "left_anti")
-    new_blacklist = (
-        last.filter(F.col("last_kind") == "error").select("sensor").union(untouched)
-    )
-    return alerts, new_blacklist
+    return {
+        "carried": [F.col("sensor"), F.lit(True).alias("carried")],
+        "carried_fill": {"carried": F.coalesce("carried", F.lit(False))},
+        "suppressed": {"suppressed": (F.col("kind") == "error") & blacklisted_before},
+        "emitted": ~F.col("suppressed"),
+        "alert": [
+            F.col("seq"),
+            F.col("sensor").alias("name"),
+            F.col("kind"),
+            F.when(F.col("kind") == "resolve", F.lit("resolve"))
+            .otherwise(F.to_json("messages"))
+            .alias("value"),
+        ],
+        "last_kind": F.max_by("kind", "seq").alias("last_kind"),
+        "last_error": F.col("last_kind") == "error",
+    }
 
 
 def derive_alerts(

@@ -93,9 +93,6 @@ def q_mapper_route_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the straight-SQL equivalent of the routed feature table."""
     obs = _events_as_obs(spark, sf_dir)
     kmap_df = _events_registry(spark)
-    # default annotate (no pre-rendered sink fields): this is a one-shot
-    # single-sink query, where the renditions' extra transform level costs more
-    # than it saves (measured r14; the fused form is for the streaming cache)
     ann = M.annotate(M.normalize(obs), kmap_df)
     return M.feature_rows(ann, "click_feature", [("k", "INTEGER")]).select(
         "node_id", "datetime", "meta_id", "sensor", "network", "k"
@@ -1901,8 +1898,6 @@ def q_mapper_split_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bench times THIS, not the pipeline twice)."""
     obs = _events_as_obs(spark, sf_dir)
     kmap_df = _events_registry(spark)
-    # default annotate: one-shot single pass, no pre-rendered sink fields
-    # (measured r14 — the fused renditions only pay off on the streaming cache)
     ann = M.annotate(M.normalize(obs), kmap_df)
 
     k_payload = F.element_at("_fp", F.lit("click_feature.k"))
@@ -1926,7 +1921,7 @@ def q_mapper_split_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("network"),
         F.replace(
             # unknown sensor -> misfit == the whole data map; render it directly
-            # (byte-identical, pinned by test_mapper_fused) instead of
+            # (byte-identical, pinned by test_mapper) instead of
             # rebuilding a variant map from the entries. Literal-pattern
             # replace: no regex engine on the 80%-of-rows payload render.
             F.when(~F.col("_known"), F.to_json("data")).otherwise(

@@ -185,27 +185,13 @@ class MapperStream:
         # (per-feature routes, dead-letter, emits, alert derivation) consumes
         # it, and the variant/HOF annotate pass is the pipeline's dominant
         # cost — without the cache each sink re-runs it (~4-5x per batch).
-        # The cached layout is sink_projection's: VARIANT-FREE (annotate renders
-        # every sink-ready field in its single pass, carry_variant=False drops
-        # the raw values and the per-row registry copy) and PRE-FILTERED into
-        # per-sink columns (_clean/_errs/misfit_json), so each sink's cache read
-        # prunes to exactly its own column and runs no per-entry filter or
-        # variant re-interpretation.
+        # Each sink derives its output from the carried variant values, as
+        # the one-shot queries do (see annotate for the measured reason).
         # In steady state the stale and fresh registry snapshots are IDENTICAL
         # (metadata changes are rare events), and annotate is a pure function of
         # (batch, registry) — so one pass serves both roles and the alert
         # comparison degenerates correctly (no transitions fire).
-        fresh_ann = M.sink_projection(
-            M.annotate(
-                norm,
-                fresh_kmap,
-                typed=True,
-                emit=True,
-                misfit=True,
-                alert=True,
-                carry_variant=False,
-            )
-        ).persist()
+        fresh_ann = M.annotate(norm, fresh_kmap).persist()
         stale_all_discrepant = False
         if unchanged:
             stale_ann = fresh_ann
@@ -221,22 +207,14 @@ class MapperStream:
             stale_all_discrepant = True
         else:
             # registry actually changed: the stale side only feeds the alert
-            # join's per-row `discrepant` bit, so annotate with every sink
-            # rendition off and project just the columns alert_events reads.
+            # join's per-row `discrepant` bit, so project just the columns
+            # alert_events reads (the optimizer prunes the variant-map halves).
             # Consumed exactly once — no persist.
-            stale_ann = M.annotate(
-                norm, self._stale_kmap, carry_variant=False
-            ).select("seq", "sensor", "_known", "bad_keys")
+            stale_ann = M.annotate(norm, self._stale_kmap).select(
+                "seq", "sensor", "_known", "bad_keys"
+            )
 
-        result = M.MapperResult(
-            annotated=fresh_ann,
-            dead_letter=M.dead_letter(fresh_ann),
-            emits=M.emit_messages(fresh_ann),
-            features={
-                e["feature"]: M.feature_rows(fresh_ann, e["feature"], e["properties"])
-                for e in registry
-            },
-        )
+        result = M.route(fresh_ann, registry)
 
         # clean rows -> one lake TABLE PER FEATURE (lake_dir/<feature>, partitioned
         # by network inside). Each feature table has its own stable typed schema —

@@ -1,10 +1,9 @@
-"""Stateful alert dedup as a true streaming operator.
+"""Stateful streaming operators over applyInPandasWithState.
 
-The batch implementation (operators/alerts.py) folds per-sensor event sequences
-with a window + a state DataFrame. This module is the Structured Streaming twin:
-applyInPandasWithState keyed by sensor, state = blacklisted flag — the reference's
-in-memory `blacklist` array (app/mapper.js:42) as a fault-tolerant keyed state
-store (checkpointed; survives restarts, which the reference does not).
+Per-key event-time rate limiting (`throttle_stream`) and timer-closed
+sessionization (`session_finalizer`, with its batch twin
+`closed_sessions_batch`), each holding its per-key state in a fault-tolerant,
+checkpointed state store that survives restarts.
 """
 
 from __future__ import annotations
@@ -15,49 +14,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = "seq long, name string, kind string, value string"
-STATE_SCHEMA = "blacklisted boolean"
-
-
-def _fold_sensor_events(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Fold one sensor's alert events through the blacklist state machine.
-
-    Input rows: (seq, sensor, kind, value) where kind in {error, resolve} and
-    value is the ready-to-post payload. Emits every resolve; emits an error only
-    when not blacklisted; updates state per transition (send_error/send_resolve,
-    app/mapper.js:455-489)."""
-    (sensor,) = key
-    blacklisted = state.get[0] if state.exists else False
-    out = []
-    for pdf in pdfs:
-        for row in pdf.sort_values("seq").itertuples():
-            if row.kind == "resolve":
-                out.append((row.seq, sensor, "resolve", row.value))
-                blacklisted = False
-            else:
-                if not blacklisted:
-                    out.append((row.seq, sensor, "error", row.value))
-                blacklisted = True
-    state.update((blacklisted,))
-    yield pd.DataFrame(out, columns=["seq", "name", "kind", "value"])
-
-
-def streaming_alert_dedup(events: DataFrame) -> DataFrame:
-    """events: streaming DataFrame (seq, sensor, kind, value) -> deduped alerts.
-
-    State volume is one boolean per sensor — trivially shardable by the state
-    store; the shuffle is on `sensor`, the same key the events already carry."""
-    return events.groupBy("sensor").applyInPandasWithState(
-        _fold_sensor_events,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
 
 THROTTLE_OUTPUT_SCHEMA = (
     "key string, seq long, passed boolean, n_in_window long, window_start long"

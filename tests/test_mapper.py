@@ -113,6 +113,18 @@ def test_dead_letter(result):
     assert dl["006"][1] == "wubdb89"
 
 
+def test_unknown_sensor_residue_matches_misfit_render(result):
+    """dead_letter and q_mapper_split_events render an unknown sensor's residue
+    as to_json(data) instead of rebuilding misfit_data: for every annotated
+    row the shortcut must equal to_json(misfit_data), NULLs included."""
+    ann = result.annotated
+    shortcut = F.when(~F.col("_known"), F.to_json("data")).otherwise(
+        F.to_json("misfit_data")
+    )
+    assert ann.filter(~F.col("_known")).count() > 0
+    assert ann.filter(~shortcut.eqNullSafe(F.to_json("misfit_data"))).count() == 0
+
+
 def test_emit_messages(result):
     emits = result.emits.collect()
     assert len(emits) == 7  # integration_tests.js:335 (data_count == 7)
